@@ -191,8 +191,8 @@ object Bench {
 
   /** Structured Streaming evidence leg: build a corpus state at local[8],
     * replay a deterministic ingest stream (CorpusGen.streamFile mix) through
-    * the streaming front door (first-seen gate + stream-static LSH near-dup
-    * join, AvailableNow micro-batches), and assert stream/batch parity on
+    * the streaming front door (first-seen gate + LSH near-dup corpus
+    * probe, AvailableNow micro-batches), and assert stream/batch parity on
     * the emitted pair set. The timed span covers the streaming queries only
     * (corpus build + index construction are setup). Returns
     * (replayFilesPerSec, acceptedRows, pairRows, parityOk). */

@@ -410,9 +410,9 @@ object Probe {
         SparkEntry.queries("q45_vendored_flags")(spark, sf),
       // the streaming ingest plan, dumped through its batch-parity shape
       // (identical operators; a started streaming query can't be explained
-      // here): broadcast-dict encode -> band explode -> index equi-join ->
-      // first-collision filter -> verify kernel
-      "streaming near-dup probe (stream-static LSH join, batch-parity shape)" -> {
+      // here): broadcast-dict encode -> band hashes -> broadcast corpus
+      // probe (candidate lookup + verify kernel) -> explode
+      "streaming near-dup probe (broadcast corpus probe, batch-parity shape)" -> {
         val hot = Vocabulary.hotTokenIds(vocab, corpusSize, cfg)
         // the index contract: exact-class representatives only
         val encodedReps = Pipeline.repEncoded(docs, encoded)

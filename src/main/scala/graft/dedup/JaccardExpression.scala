@@ -20,6 +20,22 @@ object JaccardKernel {
     else Jaccard.round6(inter.toDouble / (na + nb - inter).toDouble)
   }
 
+  /** [[sim]] against the sorted slice `b(from until until)` of a flat int
+    * array — the broadcast corpus probe's packed token sets. */
+  def sim(a: ArrayData, b: Array[Int], from: Int, until: Int): Double = {
+    val na = a.numElements()
+    val nb = until - from
+    var i = 0; var j = from; var inter = 0
+    while (i < na && j < until) {
+      val x = a.getInt(i); val y = b(j)
+      if (x == y) { inter += 1; i += 1; j += 1 }
+      else if (x < y) i += 1
+      else j += 1
+    }
+    if (inter == 0) 0.0
+    else Jaccard.round6(inter.toDouble / (na + nb - inter).toDouble)
+  }
+
   /** Two-pointer sorted intersection count on Tungsten arrays. */
   def count(a: ArrayData, b: ArrayData): Int = {
     val na = a.numElements()

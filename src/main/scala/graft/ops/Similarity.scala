@@ -325,8 +325,11 @@ object Similarity {
       // over ONE embeddings table pass them once, skipping this operator's
       // sizing count job and centroid collect. null = compute here
       // (identical result: the quantizer is a pure function of the input).
+      // Mutually exclusive with an explicit nCentroids.
       knownCentroids: Array[(Long, Array[Double])] = null
   ): DataFrame = {
+    require(knownCentroids == null || nCentroids == 0,
+      s"ivfCosineTopK: pass either knownCentroids or nCentroids ($nCentroids), not both")
     val base: Array[(Long, Array[Double])] =
       if (knownCentroids != null) knownCentroids
       else {
@@ -448,6 +451,8 @@ object Similarity {
       // precomputed quantizer — same contract as [[ivfCosineTopK]]'s param
       knownCentroids: Array[(Long, Array[Double])] = null
   ): DataFrame = {
+    require(knownCentroids == null || nCentroids == 0,
+      s"semDedup: pass either knownCentroids or nCentroids ($nCentroids), not both")
     val cents =
       if (knownCentroids != null) knownCentroids
       else {

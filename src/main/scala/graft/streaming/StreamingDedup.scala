@@ -17,11 +17,13 @@ import org.apache.spark.sql.functions._
   *
   * Design constraints that shaped every function here:
   *  - STATELESS WHERE POSSIBLE. Tokenize / encode / sign are narrow
-  *    per-row expressions; candidate generation is a stream-static equi-join
-  *    (no stream-stream join, no watermark bookkeeping); exact verification
-  *    is another stream-static join plus the codegen'd [[JaccardSorted]]
-  *    kernel. The near-dup path is entirely STATELESS; the module's only
-  *    stateful operators are [[firstSeen]]'s within-stream dropDuplicates
+  *    per-row expressions; candidate generation and exact verification are
+  *    one more: the [[ProbeCorpus]] expression over a [[CorpusProbe]]
+  *    (index postings + corpus token sets) broadcast once per query
+  *    definition — no join, no watermark bookkeeping and no
+  *    per-micro-batch corpus scan on the near-dup path. The
+  *    near-dup path is entirely STATELESS; the module's only stateful
+  *    operators are [[firstSeen]]'s within-stream dropDuplicates
   *    (optional, watermark-boundable) and [[ingestStats]]' windowed
   *    aggregation (state = one row per open window per group).
   *  - APPEND-MODE SAFE. No aggregation sits on the stream side of the
@@ -101,10 +103,9 @@ object StreamingDedup {
     }
   }
 
-  /** The static corpus's LSH probe index, built ONCE batch-side from the
-    * pipeline's encoded table: one skinny row per (group, band, band_hash,
-    * corpus doc), carrying the doc's full band-hash array for the
-    * first-collision dedup trick (below).
+  /** The static corpus's LSH band index, built ONCE batch-side from the
+    * pipeline's encoded table: one skinny (group, band, band_hash,
+    * c_doc_id) row per indexed band of each corpus doc.
     *
     * Feed it exact-class REPRESENTATIVES — `encoded` joined to the rep rows
     * of [[Pipeline.exactClassMap]] (`doc_id === rep_id`), exactly what the
@@ -117,15 +118,13 @@ object StreamingDedup {
     * [[Pipeline.expandExactClasses]].
     *
     * Hot buckets: a boilerplate band hash shared by B corpus docs fans
-    * every colliding stream row out B ways — the stream-static analogue of
-    * the batch straggler [[Config.maxBucket]] guards. The cap here keeps
-    * the `maxBucket` smallest doc ids per bucket and NULLS the dropped
-    * bands in the carried array (`c_bhs`), so the first-collision filter
-    * (which consults `c_bhs`) stays consistent with what the index actually
-    * contains — a capped-away first band silently defers to the doc's next
-    * indexed collision instead of dropping the pair. Same recall argument
-    * as batch chain-linking: a true near-dup pair agrees on ~`bands`
-    * independent bands, and oversized buckets are boilerplate-dominated.
+    * every colliding stream row out B ways — the streaming analogue of the
+    * batch straggler [[Config.maxBucket]] guards. The cap keeps the
+    * `maxBucket` smallest doc ids per bucket; a doc capped out of one
+    * bucket is still found through any other band it shares with the
+    * stream row. Same recall argument as batch chain-linking: a true
+    * near-dup pair agrees on ~`bands` independent bands, and oversized
+    * buckets are boilerplate-dominated.
     * `hotTokenIds` (the max-df signature cap, [[Vocabulary.hotTokenIds]])
     * must be the SAME array used for the stream side so band hashes match. */
   def corpusIndex(encoded: DataFrame, cfg: Config, hotTokenIds: Array[Int] = Array.empty): DataFrame = {
@@ -135,70 +134,18 @@ object StreamingDedup {
         encoded
           .withColumn("tokens", ArrayExceptSorted(col("tokens"), hotTokenIds))
           .filter(size(col("tokens")) > 0)
-    val withB = sigIn
-      .withColumn("bhs", BandHashes(MinHashSig(col("tokens"), cfg), cfg))
-      .select(col("group"), col("doc_id").as("c_doc_id"), col("bhs"))
-    val rows = withB.select(
+    val rows = sigIn.select(
       col("group"),
-      col("c_doc_id"),
-      posexplode(col("bhs")).as(Seq("band", "band_hash"))
+      col("doc_id").as("c_doc_id"),
+      posexplode(BandHashes(MinHashSig(col("tokens"), cfg), cfg)).as(Seq("band", "band_hash"))
     )
     val w = Window.partitionBy("group", "band", "band_hash").orderBy("c_doc_id")
-    val kept = rows
+    rows
       .withColumn("rk", row_number().over(w))
       .filter(col("rk") <= cfg.maxBucket)
-      .drop("rk")
-    // rebuild the per-doc band array with capped-away bands nulled: the
-    // probe side's first-collision filter must only count bands that are
-    // REALLY in the index for this doc
-    kept
-      .groupBy("group", "c_doc_id")
-      .agg(map_from_entries(collect_list(struct(col("band"), col("band_hash")))).as("bm"))
-      .select(
-        col("group"),
-        col("c_doc_id"),
-        transform(sequence(lit(0), lit(cfg.bands - 1)), b => col("bm")(b)).as("c_bhs")
-      )
-      .select(
-        col("group"),
-        posexplode_outer(col("c_bhs")).as(Seq("band", "band_hash")),
-        col("c_doc_id"),
-        col("c_bhs")
-      )
-      .filter(col("band_hash").isNotNull)
+      .select("group", "band", "band_hash", "c_doc_id")
   }
 
-  /** Near-duplicate detection of a stream against the static corpus:
-    * (stream doc, corpus doc, exact Jaccard sim) for every pair at or above
-    * `cfg.threshold` that LSH banding surfaces — the batch pipeline's
-    * signatures->candidates->pairs stages collapsed into one stateless
-    * stream plan.
-    *
-    *   1. encode through the broadcast corpus dictionary (narrow UDF);
-    *   2. MinHash-128 + band hashes (codegen'd kernels), hot-token cap
-    *      matching the index;
-    *   3. stream-static equi-join on (group, band, band_hash) against
-    *      [[corpusIndex]];
-    *   4. FIRST-COLLISION dedup: a true pair collides in many bands — keep
-    *      only the row whose band is the first position where the stream
-    *      doc's band array agrees with the corpus doc's INDEXED band array
-    *      (nulls = capped away). Exact and stateless, the PairGen
-    *      first-collision generator's trick without its aggregation.
-    *   5. stream-static join on (group, c_doc_id) back to the encoded
-    *      corpus for full sets; verify with the codegen'd [[JaccardSorted]]
-    *      kernel (full sets — the hot-token cap never touches sims).
-    *
-    * Both static joins compare `group` NULL-SAFELY: groupKey's
-    * single-column path keeps a natural NULL group, and batch candidate
-    * generation (a groupBy) pairs within it — an equi-key here would
-    * silently report every NULL-group copy as novel.
-    *
-    * `vocab` is the batch pipeline's vocab stage (read from its
-    * checkpoint); `encoded` is its encoded stage restricted to exact-class
-    * representatives, and `index` is [[corpusIndex]] over that SAME frame
-    * with the same `hotTokenIds` — see the rep requirement there. Emitted
-    * `corpus_doc_id`s are rep ids; expand over class members with
-    * [[Pipeline.exactClassMap]] when per-member pairs are needed. */
   /** The broadcast-dictionary encode function for `vocab`. Construction is
     * EAGER and expensive (collects the vocabulary, builds and broadcasts the
     * CompactDict — [[Vocabulary.broadcastEncodeFn]]): build it once per
@@ -212,6 +159,57 @@ object StreamingDedup {
           "shard the stream by group and encode against per-group vocabularies"
       ))
 
+  /** Heap budget of one [[CorpusProbe]], in bytes (512 MiB): the probe is
+    * held once on the driver and once per executor, like the
+    * [[Vocabulary.BroadcastMaxVocab]] dictionary. Sizing is arithmetic over
+    * flat arrays ([[CorpusProbe.heapBytes]]): with P index rows, K distinct
+    * (group, band, band_hash) keys, D indexed docs and T of their tokens,
+    * 16 K + 4 P + 4 S + 12 D + 4 T + 8 bytes plus the group dictionary,
+    * where S is the key table's power-of-two size at load <= 0.6
+    * (1.67 P to 3.33 P slots, sized on P).
+    * Measured at the default [[Config]]:
+    *  - the 2,000-file stream-ingest benchmark corpus (seed 1): 57,600
+    *    index rows, 54,255 keys, 1,800 reps, 154,920 tokens ->
+    *    2,264,150 B (2.2 MiB);
+    *  - a 200k-file [[CorpusGen]] corpus, the size of `graft.Bench`'s
+    *    streaming leg: 5,120,064 index rows, 4,783,809 keys, 160,002 reps,
+    *    14,088,016 tokens -> 222,402,254 B (212 MiB).
+    * Above the budget [[nearDupAgainstCorpus]] fails when the query is
+    * defined, before anything is collected. */
+  val ProbeMaxBytes: Long = 512L << 20
+
+  /** Near-duplicate detection of a stream against the static corpus:
+    * (stream doc, corpus doc, exact Jaccard sim) for every pair at or above
+    * `cfg.threshold` that shares at least one indexed LSH band — the batch
+    * pipeline's signatures->candidates->pairs stages collapsed into one
+    * stateless, narrow stream plan.
+    *
+    * The corpus side is a [[CorpusProbe]]: the `index` postings and the
+    * token sets of the `encoded` docs they name, collected and broadcast
+    * ONCE, when this function is called (the query definition), not per
+    * micro-batch. Each micro-batch then runs, per row:
+    *
+    *   1. encode through the broadcast corpus dictionary (narrow UDF);
+    *   2. MinHash-128 + band hashes (codegen'd kernels), hot-token cap
+    *      matching the index;
+    *   3. the [[ProbeCorpus]] expression: look up the row's band hashes in
+    *      its group, take each candidate corpus doc once, verify it on full
+    *      sets with [[JaccardKernel]] (6-dp HALF_EVEN, the hot-token cap
+    *      never touches sims) and keep sims >= threshold;
+    *   4. explode the matches.
+    *
+    * Groups compare NULL-SAFELY: groupKey's single-column path keeps a
+    * natural NULL group, and batch candidate generation (a groupBy) pairs
+    * within it — the probe treats NULL as its own group key.
+    *
+    * `vocab` is the batch pipeline's vocab stage (read from its
+    * checkpoint); `encoded` is its encoded stage restricted to exact-class
+    * representatives, and `index` is [[corpusIndex]] over that SAME frame
+    * with the same `hotTokenIds` — see the rep requirement there. Emitted
+    * `corpus_doc_id`s are rep ids; expand over class members with
+    * [[Pipeline.exactClassMap]] when per-member pairs are needed. Fails
+    * with an IllegalArgumentException when the probe would exceed
+    * [[ProbeMaxBytes]]. */
   def nearDupAgainstCorpus(
       stream: DataFrame,
       vocab: DataFrame,
@@ -222,54 +220,32 @@ object StreamingDedup {
       encodeFn: Option[Column => Column] = None
   ): DataFrame = {
     val encFn = encodeFn.getOrElse(encodeFnFor(vocab))
-    val enc = stream
-      .withColumn("tokens", encFn(col("tokens")))
-      .withColumn("n_tokens", size(col("tokens")))
-      .filter(col("n_tokens") > 0)
+    val probe = stream.sparkSession.sparkContext.broadcast(CorpusProbe.build(index, encoded, cfg, ProbeMaxBytes))
     val sigTokens =
       if (hotTokenIds.isEmpty) col("tokens") else ArrayExceptSorted(col("tokens"), hotTokenIds)
-    val banded = enc
+    stream
+      .withColumn("tokens", encFn(col("tokens")))
+      .filter(size(col("tokens")) > 0)
       .withColumn("sig_tokens", sigTokens)
       .filter(size(col("sig_tokens")) > 0)
-      .withColumn("bhs", BandHashes(MinHashSig(col("sig_tokens"), cfg), cfg))
-      .drop("sig_tokens")
-    val exploded = banded.select(col("*"), posexplode(col("bhs")).as(Seq("band", "band_hash")))
-    val ix = index
-      .withColumnRenamed("group", "c_group")
-      .withColumnRenamed("band", "c_band")
-      .withColumnRenamed("band_hash", "c_band_hash")
-    val joined = exploded
-      .join(
-        ix,
-        col("group") <=> col("c_group") &&
-          col("band") === col("c_band") &&
-          col("band_hash") === col("c_band_hash")
-      )
-      .drop("c_group", "c_band", "c_band_hash")
-    // first band where the stream doc's array agrees with the doc's indexed
-    // array; the joined row at `band` proves one exists, so the filter
-    // keeps exactly one row per (stream doc, corpus doc)
-    val firstEq =
-      array_position(zip_with(col("bhs"), col("c_bhs"), (s, c) => c.isNotNull && s === c), lit(true)) - 1
-    val corpusSets =
-      encoded.select(col("group").as("e_group"), col("doc_id").as("e_doc_id"), col("tokens").as("c_tokens"))
-    joined
-      .filter(col("band") === firstEq)
-      .join(
-        corpusSets,
-        col("group") <=> col("e_group") && col("c_doc_id") === col("e_doc_id")
-      )
-      .drop("e_group", "e_doc_id")
-      .withColumn("sim", JaccardSorted(col("tokens"), col("c_tokens")))
-      .filter(col("sim") >= cfg.threshold)
       .select(
         col("group"),
         col("repo"),
         col("path"),
         col("commit"),
         col("content_sha"),
-        col("c_doc_id").as("corpus_doc_id"),
-        col("sim")
+        explode(
+          ProbeCorpus(col("group"), col("tokens"), BandHashes(MinHashSig(col("sig_tokens"), cfg), cfg), probe)
+        ).as("m")
+      )
+      .select(
+        col("group"),
+        col("repo"),
+        col("path"),
+        col("commit"),
+        col("content_sha"),
+        col("m.corpus_doc_id"),
+        col("m.sim")
       )
   }
 

@@ -220,6 +220,12 @@ class KernelSpec extends SparkSpec {
       .collect()
     rows.zip(got).foreach { case ((a, b), sim) =>
       assert(sim == dedup.Jaccard.jaccard6(a, b), s"a=${a.mkString(",")} b=${b.mkString(",")}")
+      // the slice overload (the corpus probe's packed token sets): b placed
+      // between foreign ids in one flat array
+      val flat = Array(-7, -3) ++ b ++ Array(1000, 1001)
+      val sliced = dedup.JaccardKernel.sim(
+        org.apache.spark.sql.catalyst.expressions.UnsafeArrayData.fromPrimitiveArray(a), flat, 2, 2 + b.length)
+      assert(sliced == sim, s"slice: a=${a.mkString(",")} b=${b.mkString(",")}")
     }
   }
 

@@ -16,11 +16,12 @@ case class StreamDoc(
     event_time: java.sql.Timestamp
 )
 
-/** Structured Streaming ingest path: stream-static LSH near-dup, stateful
-  * first-seen gate, watermarked ingest stats. The load-bearing invariant is
-  * BATCH/STREAM PARITY — every streaming plan, fed the same rows as one
-  * batch DataFrame, must produce the identical result — plus semantic spot
-  * checks (exact copies land at sim 1.0 against their corpus originals). */
+/** Structured Streaming ingest path: broadcast corpus-probe LSH near-dup,
+  * stateful first-seen gate, watermarked ingest stats. The load-bearing
+  * invariant is BATCH/STREAM PARITY — every streaming plan, fed the same
+  * rows as one batch DataFrame, must produce the identical result — plus
+  * semantic spot checks (exact copies land at sim 1.0 against their corpus
+  * originals). */
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
 
@@ -132,10 +133,93 @@ class StreamingSpec extends SparkSpec {
     index.unpersist()
   }
 
+  /** The stream-static join formulation the corpus probe replaced, kept
+    * as the reference: every (stream row, corpus doc) pair sharing at
+    * least one INDEXED (group, band, band_hash) key, groups compared
+    * null-safely, verified on full sets and kept at sim >= t. Rows are
+    * keyed by path. */
+  private def joinOracle(
+      prepared: DataFrame,
+      vocab: DataFrame,
+      encoded: DataFrame,
+      index: DataFrame,
+      c: Config,
+      hot: Array[Int]
+  ): Set[(String, Long, Double)] = {
+    val enc = prepared.withColumn("tokens", StreamingDedup.encodeFnFor(vocab)(col("tokens")))
+      .filter(size(col("tokens")) > 0)
+      .withColumn("sig", if (hot.isEmpty) col("tokens") else ArrayExceptSorted(col("tokens"), hot))
+      .filter(size(col("sig")) > 0)
+    val bands = enc.select(col("path"), col("group"), col("tokens"),
+      posexplode(BandHashes(MinHashSig(col("sig"), c), c)).as(Seq("band", "band_hash")))
+    val ix = index.select(col("group").as("i_group"), col("band").as("i_band"),
+      col("band_hash").as("i_hash"), col("c_doc_id"))
+    val cands = bands
+      .join(ix, col("group") <=> col("i_group") && col("band") === col("i_band") && col("band_hash") === col("i_hash"))
+      .select("path", "tokens", "c_doc_id").distinct()
+    cands
+      .join(encoded.select(col("doc_id").as("c_doc_id"), col("tokens").as("c_tokens")), "c_doc_id")
+      .withColumn("sim", JaccardSorted(col("tokens"), col("c_tokens")))
+      .filter(col("sim") >= c.threshold)
+      .select("path", "c_doc_id", "sim").collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
+  }
+
+  test("corpus probe == the stream-static join oracle (default and maxBucket = 2 index, NULL groups)") {
+    // the CorpusGen corpus plus a NULL-group family: one base, an exact
+    // copy and two near copies, so shared buckets overflow maxBucket = 2.
+    // All docs are indexed, not only exact-class reps: the class map
+    // (Pipeline.exactClassMap) joins on group with `=` and drops NULL-group
+    // docs, which would leave the NULL group out of the index
+    def c(i: Long) = CorpusGen.file(i, 42L).content
+    def drop(s: String, k: Int) = s.split(" ").drop(k).mkString(" ")
+    val nullBase = c(30)
+    val corpus = (CorpusGen.corpusLocal(200) ++ Seq(
+      CodeFile("null-repo", "n0.x", "c0", null, nullBase),
+      CodeFile("null-repo", "n1.x", "c0", null, drop(nullBase, 2)),
+      CodeFile("null-repo", "n2.x", "c0", null, drop(nullBase, 4)),
+      CodeFile("null-repo", "n3.x", "c0", null, nullBase)
+    )).toDF()
+    val docs = Pipeline.prepareDocs(corpus, cfg).persist()
+    val vocab = Vocabulary.build(docs, cfg).persist()
+    val encoded = Vocabulary.encode(docs, vocab).persist()
+    val hot = Vocabulary.hotTokenIds(vocab, docs.count(), cfg)
+    val rows = streamRows ++ Seq(
+      StreamDoc("s", "null-copy.x", "c3", null, nullBase, ts(70)),
+      StreamDoc("s", "null-near.x", "c3", null, drop(nullBase, 3), ts(71)),
+      // the same bytes as a grouped corpus doc, but in the NULL group: no
+      // match may cross groups
+      StreamDoc("s", "null-cross.x", "c3", null, c(60), ts(72))
+    )
+    val prepared = StreamingDedup.prepareStream(rows.toDF(), cfg)
+    Seq(cfg, cfg.copy(maxBucket = 2)).foreach { c =>
+      val index = StreamingDedup.corpusIndex(encoded, c, hot).persist()
+      val probedRows = StreamingDedup.nearDupAgainstCorpus(prepared, vocab, encoded, index, c, hot)
+        .select("path", "corpus_doc_id", "sim").collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
+      val probed = probedRows.toSet
+      val repeats = probedRows.length - probed.size
+      assert(repeats == 0, s"maxBucket=${c.maxBucket}: $repeats pair rows emitted more than once")
+      val oracle = joinOracle(prepared, vocab, encoded, index, c, hot)
+      assert(probed == oracle, s"maxBucket=${c.maxBucket}: probe-only ${probed -- oracle}, oracle-only ${oracle -- probed}")
+      assert(probed.exists(m => m._1 == "null-copy.x" && m._3 == 1.0), "NULL-group copy must match its corpus doc")
+      assert(probed.count(_._1 == "null-near.x") >= 2, "NULL-group near-dup must match the NULL-group family")
+      assert(!probed.exists(_._1 == "null-cross.x"), "a NULL-group row must not match a grouped corpus doc")
+      index.unpersist()
+    }
+    // the capped index really drops postings, so the second pass is not
+    // the first one again
+    val full = StreamingDedup.corpusIndex(encoded, cfg, hot).count()
+    val capped = StreamingDedup.corpusIndex(encoded, cfg.copy(maxBucket = 2), hot).count()
+    assert(capped < full, s"maxBucket = 2 kept every posting ($capped of $full)")
+    Seq(docs, vocab, encoded).foreach(_.unpersist())
+  }
+
   test("NULL group: known-gate drops the copy, near-dup still matches within the NULL group") {
     // groupKey's single-column path keeps a natural NULL group; the batch
-    // pipeline pairs within it (groupBy), so the streaming joins must too —
-    // an equi-key on group would silently treat every NULL-group row as novel
+    // pipeline pairs within it (groupBy), so the known gate and the corpus
+    // probe must too — an equi-key on group would silently treat every
+    // NULL-group row as novel
     val base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     val corpus = Seq(
       CodeFile("r", "one.x", "c0", null, base),
