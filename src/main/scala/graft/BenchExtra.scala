@@ -67,11 +67,7 @@ object BenchExtra {
         val spark = session()
         (1 to n).foreach { r =>
           spark.sparkContext.setJobDescription(s"setup rep $r")
-          time(s"rep$r enc")(SparkEntry.encCached(spark, sfDir))
-          time(s"rep$r lshVerified")(SparkEntry.lshVerifiedCached(spark, sfDir))
-          time(s"rep$r exactPairs")(SparkEntry.exactPairsCached(spark, sfDir))
-          time(s"rep$r winnowCand")(SparkEntry.winnowCandCached(spark, sfDir))
-          time(s"rep$r components")(SparkEntry.componentsCached(spark, sfDir))
+          SparkEntry.sharedChains.foreach(c => time(s"rep$r ${c.name}")(c(spark, sfDir)))
           SparkEntry.releaseTransientCaches()
           SparkEntry.releaseSharedCaches()
           spark.catalog.clearCache()

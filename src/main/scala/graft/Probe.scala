@@ -5,7 +5,6 @@ import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
 import graft.dedup._
-import graft.ops.TextAnalysis
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -21,7 +20,6 @@ import org.apache.spark.sql.functions._
   *   band   [nFiles] [cpus]         LSH candidate duplication factor
   *   qtime  <sfDir> <query...>      named SparkEntry queries, bench cache rules
   *   qprobe [sfDir]                 q23/q25 detector sub-chain breakdown
-  *   q16    [sfDir]                 3-gram PPJoin sub-chain breakdown
   *   sd     [sfDir]                 substring-dedup (q31) sub-chain breakdown
   *   vocab  <workDir> [cpus]        vocab-stage sub-steps over a docs checkpoint
   *   plans                          regenerate PLANS.md (explain formatted)
@@ -34,13 +32,12 @@ object Probe {
     case "band" :: rest   => band(rest)
     case "qtime" :: rest  => qtime(rest)
     case "qprobe" :: rest => qprobe(rest)
-    case "q16" :: rest    => q16(rest)
     case "sd" :: rest     => sd(rest)
     case "vocab" :: rest  => vocab(rest)
     case "plans" :: _     => plans()
     case other =>
       System.err.println(s"unknown probe subcommand: ${other.mkString(" ")} " +
-        "(expected scale|encode|band|qtime|qprobe|q16|sd|vocab|plans)")
+        "(expected scale|encode|band|qtime|qprobe|sd|vocab|plans)")
       sys.exit(2)
   }
 
@@ -220,53 +217,6 @@ object Probe {
       p
     }
     time("QPROBE", "components") { Components.assignAll(enc, pairs).count() }
-    spark.stop()
-  }
-
-  /** Sub-chain breakdown for q16 (3-gram Jaccard at t=0.2): gram explode,
-    * ranking, set build, prefix join and verify timed separately. */
-  private def q16(args: List[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = session(32)
-    val d = spark.read.parquet(s"$sfDir/documents.parquet")
-    val ws = TextAnalysis.words(col("text"))
-    val grams = d.select(col("doc_id"), col("lang"), explode(array_distinct(Tokenize.shingles(ws, 3))).as("gram"))
-    val gdf = grams.groupBy("gram").agg(count(lit(1)).as("df"))
-    time("Q16PROBE", "gdf-count")(println("  grams distinct: " + gdf.count()))
-    val ranked = time("Q16PROBE", "rank")(Ids.assignDense(gdf, Seq("df", "gram"), "eid"))
-    val nSing = time("Q16PROBE", "singletons")(ranked.filter(col("df") < 2).count())
-    println(s"  singletons: $nSing")
-    val pe = grams.join(ranked.select(col("gram"), col("eid").cast("int").as("eid")), "gram")
-    val sets = time("Q16PROBE", "sets") {
-      val s = pe.groupBy("doc_id", "lang").agg(sort_array(collect_list(col("eid"))).as("ts"))
-        .withColumn("n", size(col("ts")))
-        .persist()
-      println("  docs with sets: " + s.count()); s
-    }
-    val minSim = 0.2
-    val prefLen = (col("n") - ceil(lit(minSim) * col("n") - lit(1e-9)) + lit(1)).cast("int")
-    val pref = sets
-      .select(col("lang"), col("doc_id"), col("n"), posexplode(slice(col("ts"), lit(1), prefLen)).as(Seq("p", "eid")))
-      .filter(col("eid") >= nSing)
-    time("Q16PROBE", "pref-rows")(println("  pref rows: " + pref.count()))
-    val alpha = ceil(lit(minSim) / (lit(1.0) + lit(minSim)) * (col("na") + col("nb")) - lit(1e-9))
-    val cand = pref
-      .select(col("lang"), col("eid"), col("doc_id").as("a"), col("n").as("na"), col("p").as("pa"))
-      .join(pref.select(col("lang"), col("eid"), col("doc_id").as("b"), col("n").as("nb"), col("p").as("pb")), Seq("lang", "eid"))
-      .filter(col("a") < col("b"))
-      .filter(least(col("pa"), col("pb")) + lit(1) + least(col("na") - col("pa") - lit(1), col("nb") - col("pb") - lit(1)) >= alpha)
-      .select(col("lang"), col("a"), col("b"))
-      .distinct()
-    val candP = time("Q16PROBE", "cand-join") { val c = cand.persist(); println("  candidates: " + c.count()); c }
-    val sa = sets.select(col("doc_id").as("a"), col("ts").as("ts_a"), col("n").as("na"))
-    val sb = sets.select(col("doc_id").as("b"), col("ts").as("ts_b"), col("n").as("nb"))
-    time("Q16PROBE", "verify") {
-      val v = candP.join(sa, "a").join(sb, "b")
-        .withColumn("inter_cnt", IntersectCountSorted(col("ts_a"), col("ts_b")).cast("long"))
-        .withColumn("sim", col("inter_cnt").cast("double") / ((col("na") + col("nb")).cast("long") - col("inter_cnt")))
-        .filter(col("sim") >= minSim)
-      println("  verified: " + v.count())
-    }
     spark.stop()
   }
 

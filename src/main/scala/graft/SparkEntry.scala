@@ -2,7 +2,7 @@ package graft
 
 import scala.collection.concurrent.TrieMap
 
-import graft.dedup.{CacheRegistry, Components, Config, Ids, IntersectCountSorted, Jaccard, MinHash, Par, SimHash, Stopwords, Tokenize, Vocabulary}
+import graft.dedup.{CacheRegistry, Components, Config, IntersectCountSorted, Jaccard, MinHash, SetSimJoin, SimHash, Stopwords, Tokenize, Vocabulary}
 import graft.dedup.Par.spread
 import graft.ops.{CorpusPrep, Multimodal, ShardPack, Similarity, TextAnalysis}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
@@ -49,25 +49,37 @@ object SparkEntry {
     ThreadLocal.withInitial(() => new CacheRegistry)
   private def transientReg: CacheRegistry = transientRegs.get()
   private val sharedReg = new CacheRegistry
-  // (enc, vocab, vocabRows): the encode chain memoizes its vocabulary (and
-  // the count the encode-plan choice needs) alongside the encoded corpus, so
-  // the q12/q13-family consumers reuse it instead of re-tokenizing the
-  // corpus to rebuild the identical (token, df) table (round-7: the setup
-  // phase ran the regex tokenizer twice and the string-keyed dense-id rank
-  // once per rep for no new information).
-  /** (enc, vocab, vocabRows, encRows) for one (session, dir). */
-  private final case class EncBundle(enc: DataFrame, vocab: DataFrame, vocabRows: Long, encRows: Long)
-  private val encBundleMemo = TrieMap.empty[(SparkSession, String), EncBundle]
-  private val lshPairsMemo = TrieMap.empty[(SparkSession, String), (DataFrame, Long)]
-  private val exactPairsMemo = TrieMap.empty[(SparkSession, String), DataFrame]
-  private val winnowCandMemo = TrieMap.empty[(SparkSession, String), DataFrame]
-  private val componentsMemo = TrieMap.empty[(SparkSession, String), DataFrame]
-  // The deterministic sqrt(n)-sized coarse quantizer over the embeddings
-  // table: q36 (IVF) and q37 (SemDeDup) each ran an identical sizing count
-  // job + centroid collect on the same input — pure driver-side state (a few
-  // hundred centroid vectors), shared like the chains above.
-  private val embCentroidsMemo =
-    TrieMap.empty[(SparkSession, String), Array[(Long, Array[Double])]]
+
+  /** One memoized cross-query intermediate, built at most once per
+    * (session, dir). Entries of stopped sessions are dropped on access
+    * (their cached blocks died with the session's BlockManager). */
+  private[graft] final class SharedChain[T] private[SparkEntry] (val name: String, build: (SparkSession, String) => T) {
+    private val memo = TrieMap.empty[(SparkSession, String), T]
+
+    def apply(s: SparkSession, dir: String): T = memo.synchronized {
+      // synchronized: TrieMap.getOrElseUpdate may evaluate `build` in two
+      // racing threads and discard one result — but a discarded build here
+      // has already persisted + materialized its copy (shared()), doubling
+      // memory until releaseSharedCaches. Serializing builds keeps exactly one.
+      memo.filterInPlace { case ((sess, _), _) => !sess.sparkContext.isStopped }
+      memo.getOrElseUpdate((s, dir), build(s, dir))
+    }
+
+    private[SparkEntry] def clear(): Unit = memo.clear()
+  }
+
+  private val chainRegistry = scala.collection.mutable.ArrayBuffer.empty[SharedChain[_]]
+
+  /** Declare a shared chain; declaration registers it for warm + release. */
+  private def chain[T](name: String)(build: (SparkSession, String) => T): SharedChain[T] = {
+    val c = new SharedChain(name, build)
+    chainRegistry += c
+    c
+  }
+
+  /** Every shared chain, in declaration order — a chain is declared after
+    * the chains it consumes, so warming in this order builds each once. */
+  private[graft] def sharedChains: Seq[SharedChain[_]] = chainRegistry.toSeq
 
   /** Unpersist the CALLING THREAD's per-query scaffolding caches. Call after
     * each query's action, from the thread that built and materialized it. */
@@ -75,40 +87,17 @@ object SparkEntry {
 
   /** Unpersist + forget the memoized cross-query intermediates. */
   def releaseSharedCaches(): Unit = {
-    encBundleMemo.clear(); lshPairsMemo.clear(); exactPairsMemo.clear()
-    winnowCandMemo.clear(); componentsMemo.clear(); embCentroidsMemo.clear()
+    sharedChains.foreach(_.clear())
     sharedReg.release()
   }
 
-  /** Build + materialize EVERY memoized cross-query intermediate (encoded
-    * corpus + vocabulary, LSH-verified pairs, exact pairs, winnow
-    * candidates, component assignment) in one call, so a benchmark can
+  /** Build + materialize EVERY shared chain in one call, so a benchmark can
     * attribute shared-chain construction to a labeled SETUP step instead of
     * whichever family member happens to run first (round 5: q22 wore the
     * encode build, q25's spread was the verified-chain cold start). */
   def warmSharedCaches(s: SparkSession, dir: String): Unit = {
-    encCached(s, dir)
-    lshVerifiedCached(s, dir)
-    exactPairsCached(s, dir)
-    winnowCandCached(s, dir)
-    componentsCached(s, dir)
-    embCentroidsCached(s, dir)
+    sharedChains.foreach(_(s, dir))
     releaseTransientCaches()
-  }
-
-  /** Memo with stopped-session hygiene: entries of dead sessions are dropped
-    * (their cached blocks died with the session's BlockManager). */
-  private def memo[T](
-      m: TrieMap[(SparkSession, String), T],
-      s: SparkSession,
-      dir: String
-  )(build: => T): T = m.synchronized {
-    // synchronized: TrieMap.getOrElseUpdate may evaluate `build` in two
-    // racing threads and discard one result — but a discarded build here has
-    // already persisted + materialized its copy (shared()), doubling memory
-    // until releaseSharedCaches. Serializing builds keeps exactly one.
-    m.filterInPlace { case ((sess, _), _) => !sess.sparkContext.isStopped }
-    m.getOrElseUpdate((s, dir), build)
   }
 
   /** Persist + eagerly materialize a shared intermediate. */
@@ -125,189 +114,16 @@ object SparkEntry {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     s.read.parquet(s"$dir/$name.parquet")
 
-  // ---- shared building blocks over documents(doc_id, text, lang, ...) ----
-
   /** Reference-semantics tokens per doc: (doc_id, lang, token), distinct.
     * The input is spread to cluster parallelism first — the regex tokenizer
     * is the cost, and a byte-small documents scan is otherwise one task. */
   private def refTokens(docs: DataFrame): DataFrame =
     spread(docs).select(col("doc_id"), col("lang"), explode(Tokenize.tokenSet(col("text"))).as("token"))
 
-  /** Within-lang exact Jaccard pairs over pruned tokens:
-    * (lang, a, b, inter_cnt, union_cnt, sim) with sim >= minSim. */
-  private def docPairs(docs: DataFrame, minSim: Double): DataFrame =
-    docPairsBy(docs, minSim, Seq("lang"))
+  // ---- shared chains, in dependency order ----
 
-  /** Exact within-group Jaccard pairs over pruned tokens, with PPJoin-style
-    * PREFIX FILTERING (Chaudhuri/Ganti/Kaushik SSJoin, ICDE'06; Xiao et al.
-    * PPJoin, WWW'08). Reference semantics are the exact inverted-index
-    * all-pairs join (code/Stage05ComputeSimilarity.py:98-140); the output is
-    * bitwise-identical — the prefix filter only prunes the CANDIDATE join.
-    *
-    * Why it is safe: J(x,y) >= t implies |x n y| >= ceil(t*|x|) and
-    * >= ceil(t*|y|) (size filter: |y| >= |x n y| substituted into the Jaccard
-    * bound). Prefix lemma: under any shared total token order, if
-    * |x n y| >= a_x and >= a_y, the first |x|-a_x+1 tokens of x and the first
-    * |y|-a_y+1 tokens of y must share an element (all common elements would
-    * otherwise sit above the lower prefix boundary, but only a_x-1 elements
-    * of x do). So joining only each doc's prefix under a RARE-FIRST order
-    * (df asc, token asc) finds every pair at sim >= t while the join volume
-    * drops from sum(df^2) over ALL tokens to the prefix tokens only — the
-    * frequent tokens that dominate the quadratic cost sort to the back and
-    * fall out of most prefixes. Survivors are verified on the full sets with
-    * the codegen'd sorted-intersection kernel.
-    *
-    * Composite `keys` generate pairs WITHIN each distinct key combination
-    * (the reference's (year, patent_type) grouping,
-    * code/main_citation_control.py:297-328). */
-  private def docPairsBy(
-      docs: DataFrame,
-      minSim: Double,
-      keys: Seq[String],
-      prefixFilter: Boolean = true
-  ): DataFrame = {
-    val kc = keys.map(col)
-    // persisted: the regex tokenizer is the expensive part of this family
-    // and the exploded token table is consumed three times (df aggregate,
-    // rank-input materialization, set-build join) — uncached it re-runs the
-    // tokenizer per consumer. Released per query via releaseTransientCaches.
-    // spread: the tokenizer runs at cluster parallelism, not scan-split count.
-    val tok = transientReg.persist(spread(docs).select(
-      (col("doc_id") +: kc) :+ explode(Tokenize.tokenSet(col("text"))).as("token"): _*
-    ))
-    val voc = tok.groupBy("token").agg(count(lit(1)).as("df")).filter(col("df") >= 2)
-    if (prefixFilter) pairsWithPrefixFilter(tok, voc, "token", minSim, keys)
-    else pairsPlain(tok, voc, "token", minSim, keys)
-  }
-
-  /** Plain exact all-pairs tail (no prefix machinery): inverted-index join +
-    * intersection count + size join. For composite group keys the key
-    * equality already bounds the join volume, and the prefix filter's fixed
-    * costs (element ranking, set re-grouping, two extra persists) exceed
-    * what it saves — the round-3 bench showed q32 LOSING 93% to them. */
-  private def pairsPlain(
-      elems: DataFrame,
-      edf: DataFrame,
-      elemCol: String,
-      minSim: Double,
-      keys: Seq[String]
-  ): DataFrame = {
-    val kc = keys.map(col)
-    val pe = elems.join(edf.select(elemCol), elemCol)
-    val sz = pe.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val inter = pe
-      .select(kc :+ col(elemCol) :+ col("doc_id").as("a"): _*)
-      .join(pe.select(kc :+ col(elemCol) :+ col("doc_id").as("b"): _*), keys :+ elemCol)
-      .filter(col("a") < col("b"))
-      .groupBy(kc :+ col("a") :+ col("b"): _*)
-      .agg(count(lit(1)).as("inter_cnt"))
-    inter
-      .join(sz.select(col("doc_id").as("a"), col("n").as("na")), "a")
-      .join(sz.select(col("doc_id").as("b"), col("n").as("nb")), "b")
-      .withColumn("inter_cnt", col("inter_cnt").cast("long"))
-      .withColumn("union_cnt", (col("na") + col("nb")).cast("long") - col("inter_cnt"))
-      .withColumn("sim", col("inter_cnt").cast("double") / col("union_cnt"))
-      .filter(col("sim") >= minSim)
-      .select(kc ++ Seq(col("a"), col("b"), col("inter_cnt"), col("union_cnt"), col("sim")): _*)
-  }
-
-  /** Shared prefix-filtered exact-Jaccard tail: encode elements to dense ints
-    * in (df asc, element asc) order, join only each doc's prefix, verify
-    * survivors on the full sorted-int sets. `elems`: (doc_id, keys..., col
-    * named `elemCol`), distinct per doc; `edf`: (elemCol, df) — the element
-    * universe (pre-pruned as the caller requires). */
-  private def pairsWithPrefixFilter(
-      elems: DataFrame,
-      edf: DataFrame,
-      elemCol: String,
-      minSim: Double,
-      keys: Seq[String]
-  ): DataFrame = {
-    val kc = keys.map(col)
-    // dense rare-first ids: ascending id = ascending (df, element), so the
-    // sorted int array IS the prefix order and the verify kernel's input
-    val ranked = Ids.assignDense(edf, Seq("df", elemCol), "eid", transientReg)
-    val pe = elems.join(ranked.select(col(elemCol), col("eid").cast("int").as("eid")), elemCol)
-    // the per-doc set table is the hub of the plan — both prefix sides and
-    // both verify sides consume it (4 scans); cache it once. Released per
-    // query via releaseTransientCaches.
-    val sets = transientReg.persist(pe
-      .groupBy(col("doc_id") +: kc: _*)
-      .agg(sort_array(collect_list(col("eid"))).as("ts"))
-      .withColumn("n", size(col("ts"))))
-    // SINGLETON elision (see prefixVerifyFromSets): under the rare-first
-    // ranking, df=1 elements occupy exactly the id range [0, nSingletons) —
-    // one tiny job over the cached skinny ranking.
-    val nSingletons = ranked.filter(col("df") < 2).count()
-    prefixVerifyFromSets(sets, nSingletons, minSim, keys)
-  }
-
-  /** PPJoin tail over pre-built per-doc sets: `sets` must carry
-    * (doc_id, keys..., ts: sorted array<int> of rare-first element ids,
-    * n: int size) and be PERSISTED by the caller (both prefix sides and
-    * both verify sides scan it). `nSingletons` = number of df=1 element ids
-    * (the contiguous low range under the rare-first order) to elide from
-    * the candidate join — 0 for min-df-pruned universes. */
-  private def prefixVerifyFromSets(
-      sets: DataFrame,
-      nSingletons: Long,
-      minSim: Double,
-      keys: Seq[String]
-  ): DataFrame = {
-    val kc = keys.map(col)
-    // a = ceil(t*n) via ceil(t*n - 1e-9): the epsilon keeps an exact-integer
-    // t*n from rounding UP on binary error (e.g. 0.2*5 -> 1.0000000000000002),
-    // which would shorten the prefix and silently drop true pairs; a too-LONG
-    // prefix only adds candidates the verify step discards.
-    val prefLen = (col("n") - ceil(lit(minSim) * col("n") - lit(1e-9)) + lit(1)).cast("int")
-    // POSITIONAL filter (PPJoin proper, Xiao et al. WWW'08 §3.2): a match on
-    // prefix token e at 0-based sorted positions (pa, pb) bounds the overlap
-    // by min(pa,pb) + 1 + min(na-pa-1, nb-pb-1); pairs need overlap >=
-    // alpha = ceil(t/(1+t)*(na+nb)). Every per-row bound is a true upper
-    // bound, so a TRUE pair passes on every matched row (no recall loss),
-    // while at low thresholds — where the prefix itself is nearly the whole
-    // doc and prunes nothing — most candidate rows fail the bound and never
-    // reach distinct+verify. The epsilon keeps an exact-integer alpha from
-    // rounding UP on binary error (which would drop true pairs at the
-    // boundary); rounding DOWN only admits candidates verify discards.
-    // SINGLETON elision: under the rare-first ranking, df=1 elements occupy
-    // exactly the id range [0, nSingletons) — and a df=1 element can never
-    // match in the self-join (no second doc holds it). Dropping those ids
-    // from the JOIN input (sets, sizes and positions keep the full arrays,
-    // so sims are untouched) removes most of the exchange volume when the
-    // element universe is unpruned (q16's 3-gram space is singleton-
-    // dominated); for min-df-pruned callers nSingletons = 0 and this is a
-    // no-op.
-    val pref = sets
-      .select(
-        kc ++ Seq(col("doc_id"), col("n"), posexplode(slice(col("ts"), lit(1), prefLen)).as(Seq("p", "eid"))): _*
-      )
-      .filter(col("eid") >= nSingletons)
-    val alpha = ceil(lit(minSim) / (lit(1.0) + lit(minSim)) * (col("na") + col("nb")) - lit(1e-9))
-    val cand = pref
-      .select(kc ++ Seq(col("eid"), col("doc_id").as("a"), col("n").as("na"), col("p").as("pa")): _*)
-      .join(
-        pref.select(kc ++ Seq(col("eid"), col("doc_id").as("b"), col("n").as("nb"), col("p").as("pb")): _*),
-        keys :+ "eid"
-      )
-      .filter(col("a") < col("b"))
-      .filter(
-        least(col("pa"), col("pb")) + lit(1) +
-          least(col("na") - col("pa") - lit(1), col("nb") - col("pb") - lit(1)) >= alpha
-      )
-      .select(kc :+ col("a") :+ col("b"): _*)
-      .distinct()
-    val sa = sets.select(col("doc_id").as("a"), col("ts").as("ts_a"), col("n").as("na"))
-    val sb = sets.select(col("doc_id").as("b"), col("ts").as("ts_b"), col("n").as("nb"))
-    cand
-      .join(sa, "a")
-      .join(sb, "b")
-      .withColumn("inter_cnt", IntersectCountSorted(col("ts_a"), col("ts_b")).cast("long"))
-      .withColumn("union_cnt", (col("na") + col("nb")).cast("long") - col("inter_cnt"))
-      .withColumn("sim", col("inter_cnt").cast("double") / col("union_cnt"))
-      .filter(col("sim") >= minSim)
-      .select(kc ++ Seq(col("a"), col("b"), col("inter_cnt"), col("union_cnt"), col("sim")): _*)
-  }
+  /** (enc, vocab, vocabRows, encRows) for one (session, dir). */
+  private final case class EncBundle(enc: DataFrame, vocab: DataFrame, vocabRows: Long, encRows: Long)
 
   /** Memoized (encoded corpus, vocabulary, vocabRows) at [[oracleLshCfg]].
     *
@@ -323,24 +139,23 @@ object SparkEntry {
     * and the vocab row count captured here feeds the encode-plan choice
     * without its own count job. Persisted + materialized once per
     * (session, dir). */
-  private def encBundle(s: SparkSession, dir: String): EncBundle =
-    memo(encBundleMemo, s, dir) {
-      val cfg = oracleLshCfg
-      val base = transientReg.persist(
-        spread(t(s, dir, "documents")).select(
-          col("doc_id"),
-          col("lang").as("group"),
-          Tokenize.tokenSet(col("text"), cfg.shingleK).as("tokens")
-        ).filter(size(col("tokens")) > 0)
-      )
-      // vocabRows comes free from the dense-id stamp's per-partition count
-      // pass — no separate count job for the encode-plan choice
-      val (vocab0, vocabRows) = Vocabulary.buildWithCount(base, cfg, transientReg)
-      val vocab = sharedReg.persist(vocab0)
-      val enc = sharedReg.persist(Vocabulary.encode(base, vocab, vocabRows = Some(vocabRows)))
-      val encRows = enc.count() // materializes enc AND vocab (its input)
-      EncBundle(enc, vocab, vocabRows, encRows)
-    }
+  private val encBundle = chain("enc") { (s, dir) =>
+    val cfg = oracleLshCfg
+    val base = transientReg.persist(
+      spread(t(s, dir, "documents")).select(
+        col("doc_id"),
+        col("lang").as("group"),
+        Tokenize.tokenSet(col("text"), cfg.shingleK).as("tokens")
+      ).filter(size(col("tokens")) > 0)
+    )
+    // vocabRows comes free from the dense-id stamp's per-partition count
+    // pass — no separate count job for the encode-plan choice
+    val (vocab0, vocabRows) = Vocabulary.buildWithCount(base, cfg, transientReg)
+    val vocab = sharedReg.persist(vocab0)
+    val enc = sharedReg.persist(Vocabulary.encode(base, vocab, vocabRows = Some(vocabRows)))
+    val encRows = enc.count() // materializes enc AND vocab (its input)
+    EncBundle(enc, vocab, vocabRows, encRows)
+  }
 
   private[graft] def encCached(s: SparkSession, dir: String): DataFrame =
     encBundle(s, dir).enc
@@ -351,104 +166,58 @@ object SparkEntry {
     (b.vocab, b.vocabRows)
   }
 
-  /** Memoized MinHash-LSH verified pair table at [[oracleLshCfg]] — shared
-    * by q23 (projection) and q25 (components input), so the signatures →
-    * candidates → verify chain runs ONCE per (session, dir) instead of per
-    * query (the round-4 q25 regression: each family member rebuilt it). */
+  /** Memoized MinHash-LSH verified pair table at [[oracleLshCfg]] plus its
+    * exact row count (the materializing count is captured, not re-run) —
+    * shared by q23 (projection) and q25 (components input), so the
+    * signatures → candidates → verify chain runs ONCE per (session, dir)
+    * instead of per query (the round-4 q25 regression: each family member
+    * rebuilt it). The count is a proven edge bound for the components
+    * family's driver-local path. */
+  private[graft] val lshVerifiedWithCount: SharedChain[(DataFrame, Long)] = chain("lshVerified") { (s, dir) =>
+    val cfg = oracleLshCfg
+    val b = encBundle(s, dir)
+    // persisted: at this config candidatePairs takes the first-collision
+    // path; the known doc count bounds every band bucket's size, so when
+    // it is <= maxBucket the oversized-bucket probe job is skipped
+    // entirely (PairGen proves the set empty by arithmetic). Transient —
+    // dead once the count below has materialized.
+    val sigs = transientReg.persist(MinHash.withSignature(b.enc, cfg))
+    val pairs = sharedReg.persist(Jaccard.verifyCounts(
+      MinHash.candidatePairs(sigs, cfg, docCountBound = b.encRows),
+      b.enc,
+      cfg.threshold
+    ))
+    (pairs, pairs.count())
+  }
+
   private[graft] def lshVerifiedCached(s: SparkSession, dir: String): DataFrame =
     lshVerifiedWithCount(s, dir)._1
 
-  /** The memoized LSH-verified pair table plus its exact row count (the
-    * materializing count is captured, not re-run) — the count is a proven
-    * edge bound for the components family's driver-local path. */
-  private[graft] def lshVerifiedWithCount(s: SparkSession, dir: String): (DataFrame, Long) =
-    memo(lshPairsMemo, s, dir) {
-      val cfg = oracleLshCfg
-      val b = encBundle(s, dir)
-      // persisted: at this config candidatePairs takes the first-collision
-      // path; the known doc count bounds every band bucket's size, so when
-      // it is <= maxBucket the oversized-bucket probe job is skipped
-      // entirely (PairGen proves the set empty by arithmetic). Transient —
-      // dead once the count below has materialized.
-      val sigs = transientReg.persist(MinHash.withSignature(b.enc, cfg))
-      val pairs = sharedReg.persist(Jaccard.verifyCounts(
-        MinHash.candidatePairs(sigs, cfg, docCountBound = b.encRows),
-        b.enc,
-        cfg.threshold
-      ))
-      (pairs, pairs.count())
-    }
-
   /** Memoized exact within-lang Jaccard pair table at threshold 0.5 — the
-    * q13/q14/q34/q34b/q35 family all rank or filter this one table; round 4
-    * re-ran the full PPJoin per query (~3-7 s each).
+    * q13/q14/q32/q34/q34b/q35 family all rank or filter this one table;
+    * round 4 re-ran the full PPJoin per query (~3-7 s each).
     *
-    * Built FROM THE MEMOIZED ENCODED CORPUS, not by re-tokenizing the
-    * documents table: the encode already holds each doc's min-df-pruned
-    * token set as a sorted int array, so the per-doc PPJoin sets are a
-    * NARROW map-side remap of those ids into rare-first order (broadcast
-    * int[] lookup + sort) — this removes the second tokenizer pass, the
-    * string-keyed dense-id rank over the token universe, and the
-    * explode + dictionary join + collect_list re-group shuffle the old
-    * chain paid per rep (guide §2.3/§2.4: the heavy rows already exist in
-    * the right shape one cache over). Jaccard counts are invariant under
-    * the id bijection, so the emitted (lang, a, b, inter_cnt, union_cnt,
-    * sim) rows are bitwise-identical to the old plan's (oracle q13).
-    * Vocabularies beyond the broadcast cap fall back to the original
-    * string-keyed chain (the remap array must fit one executor). */
-  private[graft] def exactPairsCached(s: SparkSession, dir: String): DataFrame =
-    memo(exactPairsMemo, s, dir) {
-      val (vocab, vocabRows) = vocabCached(s, dir)
-      if (vocabRows <= oracleLshCfg.broadcastMaxVocab) {
-        val enc = encCached(s, dir)
-        // rare-first eids: rank the dense token ids by (df, token_id). The
-        // token ids are assigned in token-ascending order, so (df, token_id)
-        // is the same total order as the old (df, token) string rank. The
-        // rank is computed on the DRIVER from the collected skinny
-        // (token_id, df) table — this path is gated on vocabRows <=
-        // broadcastMaxVocab, the same bound under which the encode already
-        // collects the full dictionary, so the sort is bounded arithmetic
-        // (<= 8M longs), and it replaces the distributed range-stamp's
-        // persist + sample + count jobs with the one collect we need anyway.
-        val tidDf = vocab
-          .select(col("token_id").cast("int"), col("df"))
-          .collect()
-          .map(r => (r.getInt(0), r.getLong(1)))
-          .sortBy { case (tid, df) => (df, tid) }
-        val remap = new Array[Int](vocabRows.toInt)
-        var eid = 0
-        tidDf.foreach { case (tid, _) => remap(tid) = eid; eid += 1 }
-        val bRemap = s.sparkContext.broadcast(remap)
-        val remapUdf = udf { (tokens: Seq[Int]) =>
-          val m = bRemap.value
-          val out = new Array[Int](tokens.length)
-          var i = 0
-          tokens.foreach { tid => out(i) = m(tid); i += 1 }
-          java.util.Arrays.sort(out)
-          out
-        }
-        // persisted: the set table is the hub — both prefix sides and both
-        // verify sides scan it (see prefixVerifyFromSets)
-        val sets = transientReg.persist(
-          enc.select(
-            col("doc_id"),
-            col("group").as("lang"),
-            remapUdf(col("tokens")).as("ts"),
-            col("n_tokens").as("n")
-          )
-        )
-        // min-df-pruned universe: no singletons by construction
-        shared(prefixVerifyFromSets(sets, nSingletons = 0L, 0.5, Seq("lang")))
-      } else shared(docPairs(t(s, dir, "documents"), 0.5))
-    }
+    * Built by [[SetSimJoin.fromEncoded]] FROM THE MEMOIZED ENCODED CORPUS,
+    * not by re-tokenizing the documents table: the encode already holds
+    * each doc's min-df-pruned token set as a sorted int array, so the
+    * rare-first PPJoin sets are a remap of those ids (Jaccard counts are
+    * invariant under the id bijection, so the rows equal oracle q13). */
+  private[graft] val exactPairsCached: SharedChain[DataFrame] = chain("exactPairs") { (s, dir) =>
+    val b = encBundle(s, dir)
+    shared(
+      SetSimJoin
+        .fromEncoded(b.enc, b.vocab, 0.5, Some(b.vocabRows), oracleLshCfg.broadcastMaxVocab, transientReg)
+        .withColumnRenamed("group", "lang")
+    )
+  }
 
   private val q31Cfg = graft.dedup.SuffixDedup.SubConfig(k = 16, window = 5, minMatch = 20)
 
   /** Memoized winnow candidate pairs at [[q31Cfg]] — q31a projects them and
     * q31b's suffix-automaton verify consumes them; without the memo each
     * query rebuilt the fingerprint -> df-cap -> bucket-pair chain. */
-  private[graft] def winnowCandCached(s: SparkSession, dir: String): DataFrame =
-    memo(winnowCandMemo, s, dir)(shared(
+  private[graft] val winnowCandCached: SharedChain[DataFrame] = chain("winnowCand") { (s, dir) =>
+    shared(
       graft.dedup.SuffixDedup.candidatePairs(
         // spread: the rolling-hash + winnow kernel runs at cluster
         // parallelism, not scan-split count (one task on a sub-MB file)
@@ -457,32 +226,29 @@ object SparkEntry {
         q31Cfg,
         transientReg
       )
-    ))
+    )
+  }
 
   /** Memoized component assignment over the full corpus — q25 emits it and
     * q42's survivorship window consumes it; without the memo each query
     * re-ran the identical connected-components pass (distinct + collect +
     * union-find + relabel join) on the same memoized pair table. */
-  private[graft] def componentsCached(s: SparkSession, dir: String): DataFrame =
-    memo(componentsMemo, s, dir) {
-      val (pairs, nPairs) = lshVerifiedWithCount(s, dir)
-      shared(Components.assignAll(encCached(s, dir), pairs, knownEdgeBound = nPairs))
-    }
+  private[graft] val componentsCached: SharedChain[DataFrame] = chain("components") { (s, dir) =>
+    val (pairs, nPairs) = lshVerifiedWithCount(s, dir)
+    shared(Components.assignAll(encCached(s, dir), pairs, knownEdgeBound = nPairs))
+  }
 
   /** Memoized sqrt(n) coarse quantizer over the embeddings table — the
-    * exact centroids q36 and q37 would each recompute: n from one count,
-    * nc = max(16, ceil(sqrt(n))) (the operators' shared adaptive default),
-    * centroids = the nc lowest-vec_id embeddings. A pure function of the
-    * input table, so the consumers' outputs are bitwise unchanged. */
-  private[graft] def embCentroidsCached(
-      s: SparkSession,
-      dir: String
-  ): Array[(Long, Array[Double])] =
-    memo(embCentroidsMemo, s, dir) {
-      val emb = t(s, dir, "embeddings")
-      val nc = math.max(16, math.ceil(math.sqrt(emb.count().toDouble)).toInt)
-      graft.ops.Similarity.centroids(emb, nc)
-    }
+    * exact centroids q36 (IVF) and q37 (SemDeDup) would each recompute: n
+    * from one count, nc = max(16, ceil(sqrt(n))) (the operators' shared
+    * adaptive default), centroids = the nc lowest-vec_id embeddings. Pure
+    * driver-side state (a few hundred centroid vectors) and a function of
+    * the input table, so the consumers' outputs are bitwise unchanged. */
+  private[graft] val embCentroidsCached: SharedChain[Array[(Long, Array[Double])]] = chain("embCentroids") { (s, dir) =>
+    val emb = t(s, dir, "embeddings")
+    val nc = math.max(16, math.ceil(math.sqrt(emb.count().toDouble)).toInt)
+    graft.ops.Similarity.centroids(emb, nc)
+  }
 
   private val tokFilterSql =
     s"""length(token) > 1 AND NOT regexp_matches(token, '^[0-9]+$$')
@@ -777,7 +543,7 @@ object SparkEntry {
       // as the token pairs (no min-df prune on grams — df >= 1).
       val d = t(s, dir, "documents")
       // persisted: gram building dominates this query and the gram table is
-      // consumed three times (see docPairsBy). The compiled WordGramSet
+      // consumed three times (df aggregate, rank input, set build). The compiled WordGramSet
       // kernel replaced the round-4 regexp + interpreted higher-order
       // transform + array_distinct chain (its first materialization was
       // ~7.5 s of the query's ~6 s median at sf0.1).
@@ -789,7 +555,7 @@ object SparkEntry {
           explode(graft.dedup.WordGramSet(col("text"), 3)).as("gram")
         ))
       val gdf = grams.groupBy("gram").agg(count(lit(1)).as("df"))
-      pairsWithPrefixFilter(grams, gdf, "gram", 0.2, Seq("lang"))
+      SetSimJoin.fromElements(grams, gdf, "gram", 0.2, Seq("lang"), transientReg)
         .select("lang", "a", "b", "sim")
     }),
 

@@ -112,15 +112,20 @@ object Pipeline {
 
   /** (doc_id, group, rep_id): byte-identical files collapse to the min-doc_id
     * representative of their (group, content_sha) class before candidate
-    * generation. A plain window-min — never materializes a class member list
-    * in one row, so a 100k-copy boilerplate file cannot OOM an executor. */
+    * generation. A groupBy min joined back to the members — never
+    * materializes a class member list in one row, so a 100k-copy
+    * boilerplate file cannot OOM an executor. The join compares `group`
+    * null-safely: the single-column group key keeps a natural NULL group,
+    * which groupBy forms like any other, and a plain equi-join would drop
+    * its members (no class, no rep, no pairs). */
   def exactClassMap(docs: DataFrame): DataFrame = {
     val mins = docs
       .groupBy("group", "content_sha")
       .agg(min(col("doc_id")).as("rep_id"))
+      .select(col("group").as("m_group"), col("content_sha").as("m_sha"), col("rep_id"))
     docs
       .select(col("doc_id"), col("group"), col("content_sha"))
-      .join(mins.hint("shuffle_hash"), Seq("group", "content_sha"))
+      .join(mins.hint("shuffle_hash"), col("group") <=> col("m_group") && col("content_sha") === col("m_sha"))
       .select(col("doc_id"), col("group"), col("rep_id"))
   }
 

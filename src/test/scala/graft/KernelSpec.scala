@@ -174,8 +174,9 @@ class KernelSpec extends SparkSpec {
   }
 
   test("round6 is NOT Spark's bround: CPython rounds the true binary value, bround the shortest repr") {
-    // Why ExactPairs keeps its rounding UDF instead of the codegen'd
-    // bround(_, 6): the two semantics diverge on decimal-exact but
+    // Why reference-parity rounding uses Jaccard.round6 (the exact path's
+    // parity test rounds SetSimJoin's exact counts with it) and not the
+    // codegen'd bround(_, 6): the two semantics diverge on decimal-exact but
     // binary-INexact 7th-digit ties. 1/640 = 0.0015625 exactly in decimal,
     // but 640 = 2^7*5 is not a binary power, so the nearest double sits just
     // ABOVE the tie: CPython's round() (and round6, which models it with the

@@ -33,13 +33,68 @@ class PipelineParitySpec extends SparkSpec {
     val docs = Pipeline.prepareDocs(input, cfg)
     val vocab = Vocabulary.build(docs, cfg)
     val encoded = Vocabulary.encode(docs, vocab)
-    val got = pairsOf(ExactPairs.allPairs(encoded))
+    // at minSim 0 the join emits every within-group pair sharing a token;
+    // sims are rounded like the reference (CPython round, 6 dp) and pairs
+    // rounding to 0 dropped, as the reference's sim > 0 does
+    val got = SetSimJoin
+      .fromEncoded(encoded, vocab, minSim = 0.0)
+      .select("group", "a", "b", "inter_cnt", "union_cnt")
+      .collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2), Jaccard.round6(r.getLong(3).toDouble / r.getLong(4).toDouble)))
+      .filter(_._4 > 0.0)
+      .toSet
     val want = RefOracle
       .allPairs(oracleDocs(files), cfg.shingleK, cfg.minDf)
       .map(p => (p.group, p.a, p.b, p.sim))
       .toSet
     assert(want.nonEmpty, "oracle produced no pairs — fixture is broken")
     assert(got == want)
+  }
+
+  /** (group, a, b, inter_cnt, union_cnt, sim) rows of a pair table. */
+  private def countRows(df: DataFrame): Set[(String, Long, Long, Long, Long, Double)] =
+    df.select("group", "a", "b", "inter_cnt", "union_cnt", "sim")
+      .collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4), r.getDouble(5)))
+      .toSet
+
+  test("SetSimJoin at 0.2 and 0.5 equals exact inter / union >= t over the oracle's pruned sets") {
+    val files = CorpusGen.corpusLocal(200)
+    val docs = Pipeline.prepareDocs(spark.createDataFrame(files), cfg).persist()
+    val vocab = Vocabulary.build(docs, cfg).persist()
+    val encoded = Vocabulary.encode(docs, vocab).persist()
+    val odocs = oracleDocs(files)
+    val sets = RefOracle.prunedSets(odocs, cfg.shingleK, cfg.minDf)
+    val byGroup = odocs.filter(d => sets.contains(d.id)).groupBy(_.group).toSeq
+    Seq(0.2, 0.5).foreach { t =>
+      val want = byGroup.flatMap { case (g, ds) =>
+        for {
+          x <- ds
+          y <- ds
+          if x.id < y.id
+          inter = sets(x.id).intersect(sets(y.id)).size.toLong
+          union = (sets(x.id).size + sets(y.id).size).toLong - inter
+          if inter.toDouble / union >= t
+        } yield (g, x.id, y.id, inter, union, inter.toDouble / union)
+      }.toSet
+      assert(want.size > 50, s"t=$t: fixture too weak (${want.size} pairs)")
+      val got = countRows(SetSimJoin.fromEncoded(encoded, vocab, t))
+      assert(got == want, s"t=$t: join-only ${(got -- want).take(5)}, oracle-only ${(want -- got).take(5)}")
+    }
+    Seq(docs, vocab, encoded).foreach(_.unpersist())
+  }
+
+  test("SetSimJoin: the distributed ranking plan emits exactly the broadcast remap plan's rows") {
+    val files = CorpusGen.corpusLocal(200)
+    val docs = Pipeline.prepareDocs(spark.createDataFrame(files), cfg).persist()
+    val vocab = Vocabulary.build(docs, cfg).persist()
+    val encoded = Vocabulary.encode(docs, vocab).persist()
+    Seq(0.2, 0.5).foreach { t =>
+      val broadcast = countRows(SetSimJoin.fromEncoded(encoded, vocab, t))
+      val distributed = countRows(SetSimJoin.fromEncoded(encoded, vocab, t, maxBroadcast = 1L))
+      assert(broadcast.nonEmpty && distributed == broadcast, s"t=$t")
+    }
+    Seq(docs, vocab, encoded).foreach(_.unpersist())
   }
 
   test("LSH path: recall >= 0.99 at threshold and exact precision (small corpus)") {
@@ -66,6 +121,36 @@ class PipelineParitySpec extends SparkSpec {
       .map(r => r.getLong(0) -> r.getLong(1))
       .toMap
     assert(gotClusters == wantClusters)
+  }
+
+  test("LSH path: a NULL-group family is classed, paired and clustered like any group") {
+    // groupKey's single-column path keeps a natural NULL group; the exact
+    // class map must not drop its docs (a base, an exact copy and two near
+    // copies, all with a NULL lang)
+    def drop(s: String, k: Int) = s.split(" ").drop(k).mkString(" ")
+    val base = CorpusGen.file(30, 42L).content
+    val family = Seq(
+      CodeFile("null-repo", "n0.x", "c0", null, base),
+      CodeFile("null-repo", "n1.x", "c0", null, base),
+      CodeFile("null-repo", "n2.x", "c0", null, drop(base, 2)),
+      CodeFile("null-repo", "n3.x", "c0", null, drop(base, 4))
+    )
+    val files = CorpusGen.corpusLocal(300) ++ family
+    val t = Pipeline.run(spark, spark.createDataFrame(files), cfg, tmpDir("graft-null-group"))
+
+    val oracle = RefOracle.allPairs(oracleDocs(files), cfg.shingleK, cfg.minDf)
+    val oracleAtTau = oracle.filter(_.sim >= cfg.threshold).map(p => (p.group, p.a, p.b, p.sim)).toSet
+    val nullPairs = oracleAtTau.filter(_._1 == null)
+    assert(nullPairs.size == 6, s"fixture: expected all 6 NULL-group family pairs at tau, got $nullPairs")
+    val got = pairsOf(t.pairs)
+    assert(got.subsetOf(oracleAtTau))
+    assert(nullPairs.subsetOf(got), s"NULL-group pairs missing: ${nullPairs -- got}")
+    val recall = got.intersect(oracleAtTau).size.toDouble / oracleAtTau.size
+    assert(recall >= 0.99, s"recall $recall < 0.99 (${got.size} of ${oracleAtTau.size})")
+
+    val universe = t.encoded.select("doc_id").as[Long].collect().toSeq
+    val gotClusters = t.components.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(gotClusters == RefOracle.clusters(universe, oracle, cfg.threshold))
   }
 
   test("broadcast-map encode equals the shuffle-join encode plan") {

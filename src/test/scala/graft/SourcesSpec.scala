@@ -1,11 +1,10 @@
 package graft
 
-import graft.dedup.{Base50, Checkpoints, Config}
+import graft.dedup.{Checkpoints, Config}
 import org.apache.spark.sql.functions._
 
-/** Coverage for the remaining SURVEY §2 source/sink/codec items: CSV scan
-  * with header (S1), text/CSV sink (S5), anti-join resume (S8/J7), and the
-  * base-50 codec (O5).
+/** Coverage for the remaining SURVEY §2 source/sink items: CSV scan with
+  * header (S1), text/CSV sink (S5) and anti-join resume (S8/J7).
   */
 class SourcesSpec extends SparkSpec {
   import spark.implicits._
@@ -201,23 +200,5 @@ class SourcesSpec extends SparkSpec {
       "year=2015/typ=A" -> 2L, "year=2015/typ=B" -> 1L,
       "year=2016/typ=A" -> 1L, "year=2016/typ=B" -> 1L
     ))
-  }
-
-  test("O5: base-50 codec matches the reference alphabet and round-trips") {
-    // values checked against the reference algorithm by hand:
-    // 0 -> "0"; 49 -> "?"; 50 -> "10"; 2500 -> "100"; 137 -> 2*50+37 -> "2@"
-    assert(Base50.encode(0) == "0")
-    assert(Base50.encode(49) == "?")
-    assert(Base50.encode(50) == "10")
-    assert(Base50.encode(2500) == "100")
-    assert(Base50.encode(137) == "2@")
-    (0L to 3000L by 7).foreach(n => assert(Base50.decode(Base50.encode(n)) == n))
-    val viaCol = Seq(0L, 49L, 50L, 137L)
-      .toDF("n")
-      .select(Base50.encodeCol(col("n")))
-      .as[String]
-      .collect()
-      .toSeq
-    assert(viaCol == Seq("0", "?", "10", "2@"))
   }
 }

@@ -168,9 +168,7 @@ class StreamingSpec extends SparkSpec {
   test("corpus probe == the stream-static join oracle (default and maxBucket = 2 index, NULL groups)") {
     // the CorpusGen corpus plus a NULL-group family: one base, an exact
     // copy and two near copies, so shared buckets overflow maxBucket = 2.
-    // All docs are indexed, not only exact-class reps: the class map
-    // (Pipeline.exactClassMap) joins on group with `=` and drops NULL-group
-    // docs, which would leave the NULL group out of the index
+    // The index holds exact-class reps, as the streaming contract requires
     def c(i: Long) = CorpusGen.file(i, 42L).content
     def drop(s: String, k: Int) = s.split(" ").drop(k).mkString(" ")
     val nullBase = c(30)
@@ -182,7 +180,7 @@ class StreamingSpec extends SparkSpec {
     )).toDF()
     val docs = Pipeline.prepareDocs(corpus, cfg).persist()
     val vocab = Vocabulary.build(docs, cfg).persist()
-    val encoded = Vocabulary.encode(docs, vocab).persist()
+    val encoded = Pipeline.repEncoded(docs, Vocabulary.encode(docs, vocab)).persist()
     val hot = Vocabulary.hotTokenIds(vocab, docs.count(), cfg)
     val rows = streamRows ++ Seq(
       StreamDoc("s", "null-copy.x", "c3", null, nullBase, ts(70)),
